@@ -19,8 +19,6 @@ final class AnalyticsRounds(spark: SparkSession, seed: Long,
     extends Main.Phase {
   import AnalyticsRounds._
 
-  def generate(): Unit = ()
-
   // forces every query pack's initializer, which registers the shared
   // builds
   private val queries = SparkEntry.queries
@@ -34,10 +32,20 @@ final class AnalyticsRounds(spark: SparkSession, seed: Long,
     df.select(xxhash64(struct(col("*"))).as("h"))
       .agg(coalesce(expr("bit_xor(h)"), lit(0L))).head().getLong(0)
 
+  /** Warm-up: the co-purchase edge build from scratch, which reads the
+    * lineitem fixture and is the first step of every pass, so the first
+    * measured entry does not pay the session's and the parquet
+    * reader's first use. The entries' own plans stay cold until the
+    * first pass runs them. */
+  def prepare(): Unit = {
+    SharedBuilds.all.foreach(_.clear(spark))
+    build("copurchase_edges")
+  }
+
   /** Runs one step and returns its output hash. The Brandes build has
     * no frame of its own; q358 composes from it and stands as its
     * output. The co-purchase edge build that several entries share runs
-    * first in every pass, so no entry's time depends on the order. */
+    * first in every pass, so no entry pays for it. */
   private def step(name: String): Long = name match {
     case "b_copurchase_edges" => build("copurchase_edges"); 0L
     case "b_dist_brandes" =>
@@ -120,13 +128,13 @@ final class AnalyticsRounds(spark: SparkSession, seed: Long,
         s"bytes=$bytes rdds=$rdds")
   }
 
-  def corruptAndCheck(): Seq[String] = {
-    // q194's output minus one row
+  def corruptAndCheck(): Seq[(String, Seq[String])] = {
     val name = "q194_kcore"
     val df = queries(name)(spark, fixtures)
     val h = hash(df.exceptAll(df.limit(1)))
-    if (expected.get(name).contains(h)) Nil
-    else Seq(s"$name: hash $h, recorded ${expected.get(name)}")
+    Seq(s"analytics: $name output minus one row" ->
+      (if (expected.get(name).contains(h)) Nil
+       else Seq(s"$name: hash $h, recorded ${expected.get(name)}")))
   }
 }
 

@@ -1,8 +1,6 @@
 package perfbench
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 import graft.load.PartitionIO
 import graft.mart.{CloseStats, IndicatorDay}
@@ -34,17 +32,24 @@ final class BatchWeekly(spark: SparkSession, seed: Long, work: Path,
   private def after(days: Int): org.apache.spark.sql.Column =
     col("dt") >= date_sub(lit(asOf).cast("date"), days)
 
+  /** The days the reload rewrites: [asOf - ReloadDays, asOf]. */
+  private val window = after(ReloadDays) && col("dt") <= lit(asOf).cast("date")
+
   /** The hot-store history, computed from the seed on every read. */
   private def source: DataFrame = ticks(spark, seed)
+  /** An earlier version of the same ticks: same keys, other values. */
+  private def stale: DataFrame = ticks(spark, seed, revision = 1)
 
-  def generate(): Unit = ()
+  private def load(df: DataFrame): Unit =
+    PartitionIO.overwritePartitions(PartitionIO.withDayPartitions(df, "dt"),
+      tablePath, Seq("year", "month", "day"), clusterBy = Seq("id"))
 
-  /** Loads the day-partitioned table the weekly job finds in place. */
-  override def prepare(): Unit = {
+  /** Loads the day-partitioned table the weekly job finds in place:
+    * the history, with a stale version of the window the reload must
+    * replace. */
+  def prepare(): Unit = {
     Main.deleteTree(root)
-    PartitionIO.overwritePartitions(
-      PartitionIO.withDayPartitions(source, "dt"), tablePath,
-      Seq("year", "month", "day"), clusterBy = Seq("id"))
+    load(source.where(!window).unionByName(stale.where(window)))
   }
 
   private def lookback: DataFrame =
@@ -83,7 +88,7 @@ final class BatchWeekly(spark: SparkSession, seed: Long, work: Path,
   }
 
   def layers(t: Trace): Unit = {
-    val (files, bytes) = writtenSince(Paths.get(tablePath), reloadStartMs)
+    val (files, bytes) = Main.dirStats(Paths.get(tablePath), reloadStartMs)
     def once(n: String) = t.spanSeconds(n).sum
     // compute-only passes (no write) isolate the mart layer's work
     def computeOnly(n: String)(df: => DataFrame) = Main.median(
@@ -115,7 +120,6 @@ final class BatchWeekly(spark: SparkSession, seed: Long, work: Path,
   /** Read-back of the reloaded window equals the source window; the
     * mart and close stats hold one row per symbol and day. */
   private def check(): Seq[String] = {
-    val window = after(ReloadDays) && col("dt") <= lit(asOf).cast("date")
     val back = fingerprint(spark.read.parquet(tablePath).where(window))
     val want = fingerprint(source.where(window))
     val mart = spark.read.parquet(martPath)
@@ -133,23 +137,16 @@ final class BatchWeekly(spark: SparkSession, seed: Long, work: Path,
       else Some(s"close stats rows=$statsRows want=$wantStats")).flatten
   }
 
-  def corruptAndCheck(): Seq[String] = {
-    // drop one reloaded day partition's files
+  def corruptAndCheck(): Seq[(String, Seq[String])] = {
     val victim = Paths.get(tablePath,
       s"year=${asOf.take(4).toInt}", s"month=${asOf.slice(5, 7).toInt}",
       s"day=${asOf.takeRight(2).toInt}")
     Main.deleteTree(victim)
-    check()
-  }
-
-  private def writtenSince(dir: Path, sinceMs: Long): (Long, Long) = {
-    val ps = Files.walk(dir)
-    try {
-      val fs = ps.iterator().asScala.filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet") &&
-        Files.getLastModifiedTime(p).toMillis >= sinceMs).toSeq
-      (fs.length.toLong, fs.map(Files.size).sum)
-    } finally ps.close()
+    val dropped = check()
+    // the table as it stands when the reload is skipped
+    load(stale.where(window))
+    Seq("weekly: last reloaded day partition deleted" -> dropped,
+      "weekly: reload skipped" -> check())
   }
 }
 
@@ -170,8 +167,9 @@ object BatchWeekly {
   /** Events-shaped ticks (event_id, ts, user_id, event_type, value,
     * props) plus the partitioning date `dt` and the clustering key `id`
     * (= user_id). Every pseudo-random draw hashes (seed, symbol, day,
-    * tick), so the rows do not depend on the partitioning. */
-  def ticks(spark: SparkSession, seed: Long): DataFrame = {
+    * tick), so the rows do not depend on the partitioning. Another
+    * `revision` keeps every key and redraws the values. */
+  def ticks(spark: SparkSession, seed: Long, revision: Int = 0): DataFrame = {
     val start = java.time.LocalDate.parse(FirstDay)
       .atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
     // uniform [0, 1) from a hash of the given columns and a salt
@@ -190,7 +188,7 @@ object BatchWeekly {
         s"if(${u(3, "s", "d", "i")} < 0.5, 'buy', 'sell') AS event_type",
         s"if(s = $tinyPriceId, 0.00001, 30000.0 / (s + 1)) * " +
           s"(1 + 0.2 * sin((d * 24 + i) / 50.0 + s) + " +
-          s"0.02 * (${u(4, "s", "d", "i")} - 0.5)) AS value",
+          s"0.02 * (${u(4 + revision, "s", "d", "i")} - 0.5)) AS value",
         "'{}' AS props")
       .withColumn("id", col("user_id"))
       .withColumn("dt", to_date(col("ts")))

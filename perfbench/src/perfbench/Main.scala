@@ -2,6 +2,8 @@ package perfbench
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Pipeline benchmark main: one workload per process.
@@ -11,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   *   --fixtures DIR    parquet fixtures the analytics entries read
   *   --expected FILE   recorded analytics output hashes (JSON object)
   *   --launched-ms T   wall clock at process launch (set-up starts here)
-  *   --selftest        corrupt one output after the run and require the
-  *                     workload's check to catch it
+  *   --selftest        corrupt outputs after the run, one case at a
+  *                     time, and require the workload's checks to
+  *                     catch each
   *
   * The last stdout line is one JSON object: correct / attempted /
   * failed, the end-to-end values (`e2e`) and, in traced runs
@@ -31,20 +34,22 @@ object Main {
   final case class Outcome(e2e: Map[String, Double], attempted: Long,
       failed: Long, problems: Seq[String])
 
-  /** One phase of a workload. */
+  /** One phase of a workload, built on the session it runs in. */
   trait Phase {
-    /** Builds the inputs; called several times so set-up is a median. */
-    def generate(): Unit
-    /** Set-up that runs once, after the generations. */
-    def prepare(): Unit = ()
+    /** Builds the inputs and the state the measured phase starts from. */
+    def prepare(): Unit
     /** Runs the measured phase and checks its outputs. */
     def run(): Outcome
     /** Traced runs only, after the measured window: fills the phase's
       * per-layer metrics, with any extra timed calls they need. */
     def layers(t: Trace): Unit
-    /** Corrupts one output and returns the problems the check reports. */
-    def corruptAndCheck(): Seq[String]
+    /** Corrupts outputs, one case after another; returns each case's
+      * label and the problems the check reported for it. */
+    def corruptAndCheck(): Seq[(String, Seq[String])]
   }
+
+  /** Set-ups per run; `setup_s` is their median. */
+  val SetupReps = 3
 
   private def parse(argv: Array[String]): Args = {
     val m = argv.grouped(2).collect { case Array(k, v) => k -> v }.toMap
@@ -103,6 +108,20 @@ object Main {
     line.split("\\s+")(1).toDouble / 1024.0
   }
 
+  /** Parquet data files and their bytes under a directory tree,
+    * counting only files modified at or after `sinceMs`. */
+  def dirStats(dir: Path, sinceMs: Long = 0L): (Long, Long) =
+    if (!Files.exists(dir)) (0L, 0L)
+    else {
+      val ps = Files.walk(dir)
+      try {
+        val fs = ps.iterator().asScala.filter(p => Files.isRegularFile(p) &&
+          p.getFileName.toString.endsWith(".parquet") &&
+          Files.getLastModifiedTime(p).toMillis >= sinceMs).toSeq
+        (fs.length.toLong, fs.map(Files.size).sum)
+      } finally ps.close()
+    }
+
   def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val ps = Files.walk(p)
@@ -117,18 +136,32 @@ object Main {
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
     launchedMs = a.launchedMs
-    val trace = if (a.trace) Some(new Trace) else None
     Files.createDirectories(a.work)
+    val trace = if (a.trace) Some(new Trace) else None
+    // set-up, SetupReps times: each phase prepares from scratch. The
+    // first time is counted from launch, so it also holds JVM start,
+    // the session and every first use; setup_s is the median.
     val spark = session(a)
-    trace.foreach(_.register(spark))
-    val rc = try runWorkload(a, spark, trace) finally spark.stop()
+    val phases = workload(a, spark, trace)
+    val setupS = (1 to SetupReps).map { i =>
+      val t0 = if (i == 1) a.launchedMs else System.currentTimeMillis()
+      val parts = phases.map { ph =>
+        val p0 = System.nanoTime()
+        ph.prepare()
+        f"${ph.getClass.getSimpleName}=${secondsSince(p0)}%.2f"
+      }
+      val s = (System.currentTimeMillis() - t0) / 1e3
+      System.err.println(f"[perfbench] setup $i: $s%.2f s (${parts.mkString(" ")})")
+      s
+    }
+    val rc = try runWorkload(a, spark, trace, phases, median(setupS))
+      finally spark.stop()
     sys.exit(rc)
   }
 
-  private def runWorkload(a: Args, spark: SparkSession,
-      trace: Option[Trace]): Int = {
-    val sessionReadyS = (System.currentTimeMillis() - a.launchedMs) / 1e3
-    val phases: Seq[Phase] = a.workload match {
+  private def workload(a: Args, spark: SparkSession,
+      trace: Option[Trace]): Seq[Phase] =
+    a.workload match {
       case "pipeline" => Seq(
         new StreamRestart(spark, a.seed, a.seconds, a.work, trace),
         new BatchWeekly(spark, a.seed, a.work, trace))
@@ -137,20 +170,10 @@ object Main {
           AnalyticsRounds.loadExpected(a.expected), trace))
       case other => sys.error(s"unknown workload $other")
     }
-    // set-up = launch → session ready and warmed (once) + the median of
-    // three input generations + the once-only preparation
-    val genS = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      phases.foreach(_.generate())
-      secondsSince(t0)
-    }
-    val p0 = System.nanoTime()
-    phases.foreach(_.prepare())
-    val prepareS = secondsSince(p0)
-    val setupS = sessionReadyS + median(genS) + prepareS
-    System.err.println(f"[perfbench] setup: session_s=$sessionReadyS%.2f " +
-      s"generate_s=${genS.map(x => f"$x%.2f").mkString(",")} " +
-      f"prepare_s=$prepareS%.2f")
+
+  private def runWorkload(a: Args, spark: SparkSession,
+      trace: Option[Trace], phases: Seq[Phase], setupS: Double): Int = {
+    trace.foreach(_.register(spark))
     trace.foreach(_.reset())
     mark("measuring")
     val outs = phases.map(_.run())
@@ -163,14 +186,12 @@ object Main {
     val attempted = outs.map(_.attempted).sum
     val failed = outs.map(_.failed).sum
     val problems = outs.flatMap(_.problems) ++ (if (!a.selftest) Nil
-      else phases.flatMap { ph =>
-        // self-test: the corrupted output must be caught
-        val caught = ph.corruptAndCheck()
-        val name = ph.getClass.getSimpleName
-        System.err.println(s"[perfbench] selftest $name: " +
+      else phases.flatMap(_.corruptAndCheck()).flatMap { case (label, caught) =>
+        // self-test: every corruption must be caught
+        System.err.println(s"[perfbench] selftest $label: " +
           caught.headOption.fold("corruption NOT caught")(
             "corruption caught: " + _))
-        if (caught.isEmpty) Seq(s"selftest $name: corruption passed") else Nil
+        if (caught.isEmpty) Seq(s"selftest $label: corruption passed") else Nil
       })
     problems.foreach(p => System.err.println(s"[perfbench] CHECK FAILED: $p"))
     val e2e = Map("setup_s" -> setupS, "peak_rss_mb" -> peakRssMb(),

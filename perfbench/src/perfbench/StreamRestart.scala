@@ -79,8 +79,6 @@ final class StreamRestart(spark: SparkSession, seed: Long, seconds: Int,
   private val parts = Runtime.getRuntime.availableProcessors
   private var gen: Generated = _
 
-  def generate(): Unit = gen = StreamRestart.generate(seed)
-
   private final class Feed(val topic: Topic, id: Int) {
     val mem = new CappedMemoryStream(id, spark, parts, Cap)
     /** Per block: message count and each message's due time (ms, or -1
@@ -111,8 +109,10 @@ final class StreamRestart(spark: SparkSession, seed: Long, seconds: Int,
   private def withData(q: StreamingQuery) =
     q.recentProgress.filter(_.numInputRows > 0)
 
-  /** The queries' first run, over the first block of each topic. */
-  override def prepare(): Unit = {
+  /** Generates the envelopes; the queries' first run, over the first
+    * block of each topic. */
+  def prepare(): Unit = {
+    gen = generate(seed)
     Main.deleteTree(root)
     feeds = topics.zipWithIndex.map { case (t, i) => new Feed(t, 100 + i) }
     for (f <- feeds) {
@@ -239,7 +239,7 @@ final class StreamRestart(spark: SparkSession, seed: Long, seconds: Int,
   }
 
   def layers(t: Trace): Unit = {
-    val (files, bytes) = dirStats(root.resolve("hot"))
+    val (files, bytes) = Main.dirStats(root.resolve("hot"))
     t.values ++= layerValues ++ Seq(
       "load.sink_files" -> files.toDouble,
       "load.sink_bytes" -> bytes.toDouble)
@@ -265,13 +265,12 @@ final class StreamRestart(spark: SparkSession, seed: Long, seconds: Int,
       s"!= generated ${want.mkString(", ")}")
   }
 
-  def corruptAndCheck(): Seq[String] = {
-    // drop one data file of the order-book hot table
+  def corruptAndCheck(): Seq[(String, Seq[String])] = {
     val dir = root.resolve("hot").resolve("orderbook")
     val victim = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sorted.head
     Files.delete(victim)
-    check(sent)
+    Seq("stream: one order-book data file deleted" -> check(sent))
   }
 
   /** Timed static calls to each parser on a 10,000-message frame. */
@@ -305,9 +304,10 @@ object StreamRestart {
   /** Micro-batch cap: the reference's `maxOffsetsPerTrigger`. */
   val Cap = 10000L
   /** The open-loop phase lasts until it spans this many micro-batches,
-    * summed over the three queries (p90 freshness then has four batches
-    * beyond it; more would not fit the benchmark's time budget). */
-  val MinSteadyBatches = 40
+    * summed over the three queries (p90 freshness then has three
+    * batches beyond it; more would not fit the benchmark's time
+    * budget). */
+  val MinSteadyBatches = 30
   /** Messages generated for the open-loop phase, in seconds of offer. */
   val MaxSteadySeconds = 45
   val Prime = 1000003L
@@ -441,15 +441,4 @@ object StreamRestart {
     new Generated(first.toMap, backlog.toMap, steady.toMap, keys.toMap)
   }
 
-  /** Data files and bytes under a directory tree. */
-  def dirStats(dir: Path): (Long, Long) =
-    if (!Files.exists(dir)) (0L, 0L)
-    else {
-      val ps = Files.walk(dir)
-      try {
-        val fs = ps.iterator().asScala.filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet")).toSeq
-        (fs.length.toLong, fs.map(Files.size).sum)
-      } finally ps.close()
-    }
 }
